@@ -3808,7 +3808,7 @@ object Queries {
         // shingles + driver Bloom) is independent of DSIR selection —
         // build both concurrently; the bloom jobs backfill the DSIR
         // stage's straggler tails
-        val (selected, bench) = graft.util.Overlap.both(s) {
+        val (selected, bench) = graft.util.Overlap.bothOrRelease(s) {
           Dsir.select(docs, "doc_id", "text", "source",
             targetSrc = "src0", buckets = 1024, k = 200)
             .select("doc_id").localCheckpoint() // 200 ids; see q4
@@ -3817,7 +3817,7 @@ object Queries {
           Dedup.prepareDecontamination(
             docs.filter(col("source") === "src0"), "doc_id", "text",
             shingleN = 5)
-        }
+        }(_.release())
         // tokenize the 200 selected docs once; decontamination shingles
         // and the manifest's n_toks both read the array
         val withToks = selected.join(docs, "doc_id")
@@ -4495,7 +4495,7 @@ object Queries {
         // dedup chain — build it concurrently with the near-dedup
         // checkpoint so its jobs backfill that stage's idle cores
         // instead of serializing after the span pass
-        val (near, bench) = graft.util.Overlap.both(s) {
+        val (near, bench) = graft.util.Overlap.bothOrRelease(s) {
           Dedup.dropNearDupsKeepBest(
               exact.withColumn("__len", length(col("text"))),
               "doc_id", "text", "__len", threshold = 0.5,
@@ -4506,7 +4506,7 @@ object Queries {
           s.sparkContext.setJobDescription("q4: benchmark bloom build")
           Dedup.prepareDecontamination(
             d.filter(col("source") === "src0"), "doc_id", "text")
-        }
+        }(_.release())
         val spanned = Dedup.dropDupSpans(near, "doc_id", "text",
             n = 8, minDocs = 2,
             tokensCol = Some("__toks"), keepToksCol = Some("__toks"))

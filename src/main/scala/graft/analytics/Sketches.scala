@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.util.StoreLease
+import graft.util.{CatalogStore, StoreLease}
 
 /** Count-min sketch over a token stream — the classic sublinear-space
   * frequency sketch (Cormode & Muthukrishnan 2005): `depth` hash rows ×
@@ -462,127 +462,59 @@ object Sketches {
       .select(col("source"), col("p"), col("v").as("q_est"))
   }
 
-  /** Persist a per-source quantile sketch as a bucketed catalog table —
-    * the m19/d25 store discipline applied to RANK state, closing the
-    * loop the sketch's own motivation opens ("quantile state that
-    * outlives the job", [[Quantiles.globalQuantilesSketch]]): the
-    * sketch materializes ONCE (≤ sources × k rows), each later crawl
-    * absorbs via [[absorbIntoQuantileStore]] with one pass over the
-    * DELTA plus a sketch-space merge, and the accumulated corpus is
-    * never re-read. Bucketed by `source`, so every downstream
-    * per-source window ([[sketchQuantiles]]) reads it Exchange-free.
-    *
-    * The sampling FAMILY (k, keyCol, valueCol) persists as table
-    * properties: a later absorb with a different k would mix sketches
-    * of different retention thresholds (the merged state would no
-    * longer equal the sketch of the union), and a different keyCol
-    * re-weights the sample — both are silent-bias failures, so
-    * [[absorbIntoQuantileStore]] REFUSES a mismatch loudly instead. */
+  /** The quantile store: one table `tableName` (source, h, v), family
+    * (k, keyCol, valueCol) — a [[graft.util.CatalogStore]]. A different
+    * k would mix sketches of different retention thresholds (the merged
+    * state would no longer equal the sketch of the union), and a
+    * different keyCol re-weights the sample. */
+  private def quantileStore(spark: org.apache.spark.sql.SparkSession,
+                            tableName: String, k: Int, keyCol: String,
+                            valueCol: String): CatalogStore =
+    CatalogStore(spark, tableName, "qsk", "writeQuantileStore", Seq(""),
+      "k" -> k, "keyCol" -> keyCol, "valueCol" -> valueCol)
+
+  /** Persist a per-source quantile sketch as a bucketed catalog table
+    * (store contract: [[graft.util.CatalogStore]]), closing the loop the
+    * sketch's own motivation opens ("quantile state that outlives the
+    * job", [[Quantiles.globalQuantilesSketch]]): the sketch materializes
+    * ONCE (≤ sources × k rows), each later crawl absorbs via
+    * [[absorbIntoQuantileStore]] with one pass over the DELTA plus a
+    * sketch-space merge, and the accumulated corpus is never re-read.
+    * Bucketed by `source`, so every downstream per-source window
+    * ([[sketchQuantiles]]) reads it Exchange-free. */
   def writeQuantileStore(df: DataFrame, srcCol: String, keyCol: String,
                          valueCol: String, k: Int, tableName: String,
-                         path: String, nBuckets: Int = 4): Unit =
-    StoreLease.withLease(df.sparkSession,
-      StoreLease.forTable(df.sparkSession, tableName),
-      "writeQuantileStore") { _ =>
-      saveQuantileStore(quantileSketch(df, srcCol, keyCol, valueCol, k),
-        tableName, path, nBuckets, k, keyCol, valueCol)
-    }
-
-  /** Shared write tail of store build and absorb: bucketed external
-    * table + the family properties the next absorb validates. The
-    * ALTER re-runs after EVERY rewrite because overwrite-mode
-    * saveAsTable recreates the table and drops prior properties. */
-  private def saveQuantileStore(sk: DataFrame, tableName: String,
-                                path: String, nBuckets: Int, k: Int,
-                                keyCol: String, valueCol: String): Unit = {
-    sk.write.mode("overwrite").option("path", path)
-      .bucketBy(nBuckets, "source").sortBy("source", "h")
-      .format("parquet").saveAsTable(tableName)
-    sk.sparkSession.sql(
-      s"ALTER TABLE $tableName SET TBLPROPERTIES(" +
-        s"'graft.qsk.k' = '$k', 'graft.qsk.keycol' = '$keyCol', " +
-        s"'graft.qsk.valuecol' = '$valueCol')")
-  }
-
-  /** Validate a caller's (k, keyCol, valueCol) against the family the
-    * store was built with — loud failure over silently biased merges.
-    * ABSENT properties are also a hard error (unlike the legacy Dedup
-    * stores, no pre-versioning qsk table exists to grandfather): a
-    * crash between saveAsTable and the ALTER leaves exactly that
-    * state, and validating vacuously against it would let the next
-    * absorb merge a mismatched family — rebuild the store via
-    * [[writeQuantileStore]] instead. */
-  private def requireQuantileFamily(
-      spark: org.apache.spark.sql.SparkSession, tableName: String,
-      k: Int, keyCol: String, valueCol: String): Unit = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    def check(prop: String, caller: String, why: String): Unit =
-      Bridge.tableProperty(spark, tableName, prop) match {
-        case Some(stored) =>
-          require(stored == caller,
-            s"$tableName was built with $prop=$stored but this call " +
-              s"uses $caller — $why. Pass the store's value.")
-        case None => throw new IllegalStateException(
-          s"$tableName has no $prop table property — the store write " +
-            "was interrupted between table creation and the family " +
-            "ALTER, or the table was not written by " +
-            "writeQuantileStore. Rebuild it with writeQuantileStore; " +
-            "absorbing into a family-less store could silently merge " +
-            "mismatched sketches.")
+                         path: String): Unit = {
+    val sk = quantileSketch(df, srcCol, keyCol, valueCol, k)
+    quantileStore(df.sparkSession, tableName, k, keyCol, valueCol)
+      .write(path, sk, expansion = 1.0) {
+        _.overwrite(sk, "", "source", "source", "h")
       }
-    check("graft.qsk.k", k.toString,
-      "merged state would mix retention thresholds and stop equaling " +
-        "the sketch of the union")
-    check("graft.qsk.keycol", keyCol,
-      "a different sampling key re-weights the row sample (silent " +
-        "quantile bias)")
-    check("graft.qsk.valuecol", valueCol,
-      "the stored v column would mix measurements of different " +
-        "quantities")
   }
 
-  /** Absorb a delta corpus into a [[writeQuantileStore]] store: sketch
-    * the DELTA in one pass, [[quantileSketchMerge]] with the persisted
-    * state (pure sketch-space work — the accumulated corpus is never
-    * re-read), and rewrite the table in place at its catalog location.
-    * Merge ≡ sketch-of-union exactly, so store + absorb hash-matches
-    * the from-scratch sketch (oracle m21 proves it end-to-end through
-    * the parquet roundtrip, the m19 trick).
-    *
-    * IDEMPOTENT: merge is a distinct union under the bottom-k rule, so
-    * a REPLAYED absorb of the same batch (the at-least-once
-    * foreachBatch retry, an accidental double call) reproduces the
-    * identical state instead of corrupting it — no anti-join guard
-    * needed, the algebra itself is the guard (SketchesSpec pins
-    * idempotence; the m21 oracle replays a batch end-to-end). SINGLE
-    * WRITER enforced ([[graft.util.StoreLease]]): two CONCURRENT
-    * absorbs race the read-merge-rewrite cycle and one's delta can be
-    * lost — an overlapping writer now refuses loudly instead of
-    * losing it silently. The sketch-sized merged
-    * state is eagerly materialized (localCheckpoint) BEFORE the
-    * overwrite so the rewrite never reads the files it replaces. */
+  /** Absorb a delta corpus into a [[writeQuantileStore]] store (store
+    * contract: [[graft.util.CatalogStore]]): sketch the DELTA in one
+    * pass, [[quantileSketchMerge]] with the persisted state (pure
+    * sketch-space work — the accumulated corpus is never re-read), and
+    * rewrite the table in place. Merge ≡ sketch-of-union exactly, so
+    * store + absorb hash-matches the from-scratch sketch (oracle m21).
+    * The replay guard is the algebra itself: merge is a distinct union
+    * under the bottom-k rule, so a REPLAYED absorb reproduces the
+    * identical state (SketchesSpec pins idempotence; m21 replays a
+    * batch end-to-end). The sketch-sized merged state is eagerly
+    * materialized (localCheckpoint) BEFORE the overwrite so the rewrite
+    * never reads the files it replaces. */
   def absorbIntoQuantileStore(delta: DataFrame, srcCol: String,
                               keyCol: String, valueCol: String, k: Int,
                               tableName: String): Unit = {
-    import org.apache.spark.sql.graftbridge.Bridge
     val spark = delta.sparkSession
-    requireQuantileFamily(spark, tableName, k, keyCol, valueCol)
-    val nb = Bridge.bucketCount(spark, tableName)
-      .getOrElse(throw new IllegalStateException(
-        s"$tableName is not a bucketed table — was the store written " +
-          "by writeQuantileStore?"))
-    val path = Bridge.tableLocation(spark, tableName)
-      .getOrElse(throw new IllegalStateException(
-        s"$tableName has no storage location — was the store written " +
-          "by writeQuantileStore?")).toString
-    StoreLease.withLease(spark, StoreLease.forTable(spark, tableName),
-      "absorbIntoQuantileStore") { _ =>
-      val merged = quantileSketchMerge(spark.table(tableName),
-        quantileSketch(delta, srcCol, keyCol, valueCol, k), k)
-        .localCheckpoint() // ≤ sources × k rows; cuts lineage so the
-      // overwrite below no longer reads the table it replaces
-      saveQuantileStore(merged, tableName, path, nb, k, keyCol, valueCol)
-    }
+    quantileStore(spark, tableName, k, keyCol, valueCol)
+      .absorb("absorbIntoQuantileStore") { s =>
+        val merged = quantileSketchMerge(spark.table(tableName),
+          quantileSketch(delta, srcCol, keyCol, valueCol, k), k)
+          .localCheckpoint()
+        s.overwrite(merged, "", "source", "source", "h")
+      }
   }
 
   /** Shared estimate + top-k tail: join each candidate against the

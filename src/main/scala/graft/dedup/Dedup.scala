@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.enrich.CaptionStats
 import graft.text.TextAnalysis
-import graft.util.{Metrics, StoreLease}
+import graft.util.{CatalogStore, Metrics}
 
 /** Deduplication operators for LLM-scale corpora (north-star extension,
   * BASELINE.json). All keys are md5-derived so results are deterministic and
@@ -851,7 +851,11 @@ object Dedup {
       private[dedup] val mightContain: Column => Column,
       private[dedup] val bench: DataFrame,
       private[dedup] val shingleN: Int,
-      private[dedup] val nfc: Boolean)
+      private[dedup] val nfc: Boolean) {
+    /** Drop the build-side cache. [[decontaminateWith]] calls it; a
+      * caller that never reaches it (a failed sibling stage) must. */
+    def release(): Unit = benchToks.unpersist(blocking = false)
+  }
 
   /** Build [[decontaminate]]'s benchmark side eagerly (persist + count
     * + driver Bloom build — the expensive driver-blocking prefix) and
@@ -895,7 +899,7 @@ object Dedup {
     val out = corpus.join(contaminated, Seq(idCol), "left_anti")
     // release the build-side cache; the lazy plan recomputes the (small)
     // benchmark side once more when the caller executes
-    prepared.benchToks.unpersist(blocking = false)
+    prepared.release()
     out
   }
 
@@ -1662,123 +1666,55 @@ object Dedup {
     corpus.join(bad, Seq(idCol), "left_anti")
   }
 
+  /** The substring store: one table `{tablePrefix}_seeds` (`__h`,
+    * idCol, `__p`), family (seedN, nfc) — a [[graft.util.CatalogStore]]. */
+  private def substringStore(spark: org.apache.spark.sql.SparkSession,
+                             tablePrefix: String, seedN: Int,
+                             nfc: Boolean): CatalogStore =
+    CatalogStore(spark, tablePrefix, "sub", "writeSubstringStore",
+      Seq("seeds"), "seedN" -> seedN, "nfc" -> nfc)
+
   /** Persist a corpus's seed-occurrence frame as a bucketed SUBSTRING
-    * STORE — the [[writeSignatureStore]] discipline applied to
-    * exact-substring state: one table `{tablePrefix}_seeds`
-    * (`__h`, idCol, `__p`), bucketed AND sorted by the seed hash, so an
+    * STORE (store contract: [[graft.util.CatalogStore]]): one row per
+    * seed window, bucketed AND sorted by the seed hash, so an
     * incremental shard run equi-joins it with NO store-side Exchange
     * and the per-hash store counts aggregate shuffle-free.
     *
-    * Honest sizing: the store is O(corpus TOKENS) — one row per seed
-    * window — because exact-substring dedup's state is inherently
-    * suffix-array-sized (Lee et al. hold the whole suffix array on one
-    * machine; this is the same state, sharded). `suggestedStoreBuckets`
-    * runs with an 8× expansion accordingly (hex digest + id + pos ≈
-    * 7–8× the raw text bytes; swapping `__h` to a BINARY(8) slice
-    * halves it at a documented one-in-2⁶⁴-per-seed false-match risk —
-    * further gated by the run-length threshold — if storage ever
-    * dominates). */
+    * Honest sizing: the store is O(corpus TOKENS) — exact-substring
+    * dedup's state is inherently suffix-array-sized (Lee et al. hold the
+    * whole suffix array on one machine; this is the same state,
+    * sharded). The layout derives with an 8× expansion accordingly (hex
+    * digest + id + pos ≈ 7–8× the raw text bytes; swapping `__h` to a
+    * BINARY(8) slice halves it at a one-in-2⁶⁴-per-seed false-match
+    * risk, further gated by the run-length threshold). */
   def writeSubstringStore(df: DataFrame, idCol: String, textCol: String,
                           tablePrefix: String, path: String,
                           seedN: Int = 8, nfc: Boolean = true,
-                          nBuckets: Int = 0,
-                          tokensCol: Option[String] = None): Unit = {
-    val nb = if (nBuckets > 0) nBuckets
-             else suggestedStoreBuckets(df, expansion = 8.0)
-    StoreLease.withLease(df.sparkSession,
-      StoreLease.forTable(df.sparkSession, tablePrefix),
-      "writeSubstringStore") { _ =>
-      windowOccurrences(
-          origAndNormToks(df, idCol, textCol, nfc, tokensCol), idCol, seedN)
-        .write.mode("overwrite").option("path", s"$path/seeds")
-        .bucketBy(nb, "__h").sortBy("__h")
-        .format("parquet").saveAsTable(s"${tablePrefix}_seeds")
-      // persist the hash family: every later absorb/shard-run validates
-      // against these instead of trusting its own defaults — a mismatched
-      // seedN would silently join incompatible hashes (zero matches, no
-      // error), the worst failure mode for a dedup store
-      df.sparkSession.sql(
-        s"ALTER TABLE ${tablePrefix}_seeds SET TBLPROPERTIES(" +
-          s"'graft.seedn' = '$seedN', 'graft.nfc' = '$nfc')")
-    }
-  }
-
-  /** Validate a caller's (seedN, nfc) against what the store was built
-    * with — loud failure over silent zero-match joins. Stores written
-    * before the property existed validate trivially (None). */
-  private def requireSeedFamily(spark: org.apache.spark.sql.SparkSession,
-                                tablePrefix: String, seedN: Int,
-                                nfc: Boolean): Unit = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.tableProperty(spark, s"${tablePrefix}_seeds", "graft.seedn")
-      .foreach { stored =>
-        require(stored == seedN.toString,
-          s"${tablePrefix}_seeds was built with seedN=$stored but this " +
-            s"call uses seedN=$seedN — seed hashes would never match " +
-            "(silent zero-recall). Pass the store's seedN.")
+                          tokensCol: Option[String] = None): Unit =
+    substringStore(df.sparkSession, tablePrefix, seedN, nfc)
+      .write(path, df, expansion = 8.0) {
+        _.overwrite(windowOccurrences(
+          origAndNormToks(df, idCol, textCol, nfc, tokensCol), idCol, seedN),
+          "seeds", "__h")
       }
-    Bridge.tableProperty(spark, s"${tablePrefix}_seeds", "graft.nfc")
-      .foreach { stored =>
-        require(stored == nfc.toString,
-          s"${tablePrefix}_seeds was built with nfc=$stored but this " +
-            s"call uses nfc=$nfc — normalized token streams would " +
-            "diverge on non-NFC text. Pass the store's nfc.")
-      }
-  }
 
-  /** Append a shard's seed rows into an existing [[writeSubstringStore]]
-    * store (bucket count read from the catalog — an append can never
-    * mismatch the layout). Absorb the shard's ORIGINAL text (not the
-    * excised rebuild): the whole-corpus run pairs originals, so
-    * remembering the full seed stream is what keeps sequential shard
-    * runs ≡ batch [[dropDupSubstrings]] over everything seen — the
-    * same "losers must be remembered" argument as
-    * [[absorbIntoSignatureStore]].
-    *
-    * IDEMPOTENT by default: docs whose ids are already in the store are
-    * anti-joined away before the append, so a REPLAYED absorb (the
-    * at-least-once foreachBatch retry, an accidental double call) is a
-    * no-op instead of silently corrupting the occurrence counts — a
-    * duplicated seed row would double-count toward the maxOcc gate
-    * (silent recall loss) and plant duplicate positions in the
-    * diagonal-run detector, and the corruption is PERSISTENT state.
-    * The parquet append commits at job granularity (a failed job leaves
-    * no committed files), so retry-after-partial-failure re-absorbs the
-    * whole batch exactly once. The guard costs one projected scan of
-    * the store's id column per absorb; pass `idempotent = false` only
-    * where the orchestrator already guarantees exactly-once delivery of
-    * DISJOINT batches. SINGLE WRITER enforced ([[graft.util
-    * .StoreLease]]): the guard is check-then-append, so two CONCURRENT
-    * absorbs of overlapping batches could both pass the anti-join and
-    * double-insert — replay safety covers sequential retries, not
-    * concurrent writers; an overlapping writer now refuses loudly
-    * instead of corrupting persistent state. */
+  /** Append a shard's seed rows into a [[writeSubstringStore]] store
+    * (store contract: [[graft.util.CatalogStore]]). Absorb the shard's
+    * ORIGINAL text (not the excised rebuild): the whole-corpus run pairs
+    * originals, so remembering the full seed stream is what keeps
+    * sequential shard runs ≡ batch [[dropDupSubstrings]] over everything
+    * seen — the same "losers must be remembered" argument as
+    * [[absorbIntoSignatureStore]]. */
   def absorbIntoSubstringStore(docs: DataFrame, idCol: String,
                                textCol: String, tablePrefix: String,
                                seedN: Int = 8, nfc: Boolean = true,
-                               tokensCol: Option[String] = None,
-                               idempotent: Boolean = true): Unit = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val spark = docs.sparkSession
-    requireSeedFamily(spark, tablePrefix, seedN, nfc)
-    val nb = Bridge.bucketCount(spark, s"${tablePrefix}_seeds")
-      .getOrElse(throw new IllegalStateException(
-        s"${tablePrefix}_seeds is not a bucketed table — was the store " +
-          "written by writeSubstringStore?"))
-    StoreLease.withLease(spark, StoreLease.forTable(spark, tablePrefix),
-      "absorbIntoSubstringStore") { _ =>
-      val fresh =
-        if (idempotent)
-          docs.join(spark.table(s"${tablePrefix}_seeds")
-            .select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-        else docs
-      windowOccurrences(
-          origAndNormToks(fresh, idCol, textCol, nfc, tokensCol), idCol,
-          seedN)
-        .write.mode("append").bucketBy(nb, "__h").sortBy("__h")
-        .format("parquet").saveAsTable(s"${tablePrefix}_seeds")
-    }
-  }
+                               tokensCol: Option[String] = None): Unit =
+    substringStore(docs.sparkSession, tablePrefix, seedN, nfc)
+      .absorb("absorbIntoSubstringStore") { s =>
+        s.append(windowOccurrences(origAndNormToks(
+            s.fresh(docs, idCol, "seeds"), idCol, textCol, nfc, tokensCol),
+          idCol, seedN), "seeds", "__h")
+      }
 
   /** Per-hash occurrence counts over the store's seed table — groupBy
     * on the bucketing key, scan→aggregate with NO Exchange (the
@@ -1829,7 +1765,7 @@ object Dedup {
       s"dedupSubstringShardAgainst: need 1 <= seedN <= minLen (got " +
         s"seedN=$seedN, minLen=$minLen)")
     val spark = shard.sparkSession
-    requireSeedFamily(spark, tablePrefix, seedN, nfc)
+    substringStore(spark, tablePrefix, seedN, nfc).requireFamily()
     val base = origAndNormToks(shard, idCol, textCol, nfc, tokensCol)
     val shardSeeds = windowOccurrences(base, idCol, seedN)
     // combined eligibility (2 ≤ store_n + shard_n ≤ maxOcc): store
@@ -2001,12 +1937,27 @@ object Dedup {
   private def bandJoinKey: Column =
     concat_ws(":", col("band_idx"), col("band_key"))
 
-  /** Write the persisted SIGNATURE STORE for incremental near-dedup.
-    * At 100 TB nobody re-deduplicates the whole corpus per crawl: the
-    * production shape is "dedup the new shard against what's already
-    * ingested". This materializes the corpus side ONCE as two bucketed
-    * tables (registered as `<tablePrefix>_bands` / `<tablePrefix>_
-    * shingles`, files under `path`):
+  /** The text signature store: `<tablePrefix>_bands` (bk, id) and
+    * `<tablePrefix>_shingles` (id, __s), family (k, bands, shingleN) —
+    * a [[graft.util.CatalogStore]]. */
+  private def signatureStore(spark: org.apache.spark.sql.SparkSession,
+                             tablePrefix: String, k: Int, bands: Int,
+                             shingleN: Int): CatalogStore =
+    CatalogStore(spark, tablePrefix, "sig", "writeSignatureStore",
+      Seq("bands", "shingles"), "k" -> k, "bands" -> bands,
+      "shingleN" -> shingleN)
+
+  /** Band rows (bk, id) of a shingle table under one LSH family. */
+  private def signatureBands(sh: DataFrame, idCol: String, k: Int,
+                             bands: Int): DataFrame =
+    lshBands(signaturesFrom(sh, idCol, k), idCol, bands, rowsPer(k, bands))
+      .select(bandJoinKey.as("bk"), col(idCol))
+
+  /** Write the persisted SIGNATURE STORE for incremental near-dedup
+    * (store contract: [[graft.util.CatalogStore]]). At 100 TB nobody
+    * re-deduplicates the whole corpus per crawl: the production shape is
+    * "dedup the new shard against what's already ingested". This
+    * materializes the corpus side ONCE as two bucketed tables:
     *
     *  - bands: (bk = band_idx:band_key, id), bucketed+sorted by `bk` —
     *    the LSH candidate side. A shard's band keys equi-join this scan
@@ -2015,90 +1966,37 @@ object Dedup {
     *    verify side. Storing the shingle arrays (not just signatures)
     *    is what keeps incremental results EXACTLY equal to a
     *    whole-corpus [[dropNearDups]]: verification needs true shingle
-    *    sets, and re-deriving them would mean re-reading corpus text —
-    *    the thing the store exists to avoid. Store size is O(corpus
-    *    tokens); the signature-only alternative (estimate-verify via
+    *    sets, and re-deriving them would mean re-reading corpus text.
+    *    Store size is O(corpus tokens), hence the 2× layout expansion;
+    *    the signature-only alternative (estimate-verify via
     *    [[minhashEstimates]]'s agree-count) trades that space for
     *    approximate parity.
     *
-    * `k`/`bands`/`shingleN` must match the later
-    * [[dedupShardAgainst]] call (same LSH family — caller contract).
-    * `nBuckets` sizes the bucket layout — FIXED at first write (appends
-    * inherit it), so a silent small default is an at-scale footgun.
-    * The default 0 means "derive": [[suggestedStoreBuckets]] sizes it
-    * from Catalyst's input-size estimate (floor 8, so tiny fixtures
-    * keep the historical 8-bucket layout); pass an explicit count when
-    * you know the target corpus better than the estimate does. */
+    * `k`/`bands`/`shingleN` are the store's family: a later
+    * [[dedupShardAgainst]] or absorb under another family is refused. */
   def writeSignatureStore(df: DataFrame, idCol: String, textCol: String,
                           tablePrefix: String, path: String,
-                          k: Int = 12, bands: Int = 4, shingleN: Int = 3,
-                          nBuckets: Int = 0): Unit = {
-    val nb = if (nBuckets > 0) nBuckets else suggestedStoreBuckets(df)
-    StoreLease.withLease(df.sparkSession,
-      StoreLease.forTable(df.sparkSession, tablePrefix),
-      "writeSignatureStore") { _ =>
-      val sh = shingleTable(df, idCol, textCol, shingleN)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sh.count() // materialize the shared cache ONCE, up front: both
-      // writers below read it, and racing its first materialization
-      // from two threads would duplicate the shingle compute
-      // r21 (guide §2.6): the two table writes are independent — one
-      // reads cached shingles, one derives signatures from the same
-      // cache — so they overlap from two driver threads; each write's
-      // tail backfills the other's idle executors. Overlap.both
-      // settles BOTH writes before leaving the lease scope (r22: a
-      // first-await failure must not release the lease with the
-      // sibling's saveAsTable still running — single-writer hazard).
-      try graft.util.Overlap.both(df.sparkSession) {
-        lshBands(signaturesFrom(sh, idCol, k), idCol, bands,
-            rowsPer(k, bands))
-          .select(bandJoinKey.as("bk"), col(idCol))
-          .write.mode("overwrite").option("path", s"$path/bands")
-          .bucketBy(nb, "bk").sortBy("bk")
-          .format("parquet").saveAsTable(s"${tablePrefix}_bands")
-      } {
-        sh.write.mode("overwrite").option("path", s"$path/shingles")
-          .bucketBy(nb, idCol).sortBy(idCol)
-          .format("parquet").saveAsTable(s"${tablePrefix}_shingles")
-      } finally sh.unpersist(blocking = false)
-    }
-  }
-
-  /** Bucket-count derivation for the signature stores: estimated store
-    * bytes / `targetBytes` per bucket, rounded UP to a power of two,
-    * floor 8. The input-size estimate is Catalyst's
-    * (`optimizedPlan.stats.sizeInBytes` — filter/column-pruned, no job
-    * runs), scaled by `expansion` for the store's dominant table (text:
-    * shingles ≈ one 16-byte digest per corpus token, roughly 2× the
-    * raw text; images: bands ≈ 4 short rows per hash, well under 1×).
-    * Power-of-two so future manual re-bucketing can split/merge
-    * cleanly; capped at 2^20 buckets (beyond that, partition the store
-    * by shard epoch instead — one table's bucket count should not be
-    * the only scaling axis). The floor keeps tiny fixtures on the
-    * historical 8-bucket layout. */
-  def suggestedStoreBuckets(df: DataFrame,
-                            targetBytes: Long = 256L << 20,
-                            expansion: Double = 2.0): Int = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    val in = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val est = (BigDecimal(in) * expansion).toBigInt
-    val need = ((est + targetBytes - 1) / targetBytes)
-      .max(BigInt(8)).min(BigInt(1 << 20)).toInt
-    var b = 8
-    while (b < need) b <<= 1
-    b
-  }
+                          k: Int = 12, bands: Int = 4,
+                          shingleN: Int = 3): Unit =
+    signatureStore(df.sparkSession, tablePrefix, k, bands, shingleN)
+      .write(path, df, expansion = 2.0) { s =>
+        val sh = s.cache(shingleTable(df, idCol, textCol, shingleN))
+        sh.count() // materialize ONCE: both writes below read it, and
+        // racing its first materialization from two threads would
+        // duplicate the shingle compute. The two writes are independent,
+        // so they overlap; each tail backfills the other's idle cores.
+        graft.util.Overlap.both(df.sparkSession) {
+          s.overwrite(signatureBands(sh, idCol, k, bands), "bands", "bk")
+        } {
+          s.overwrite(sh, "shingles", idCol)
+        }
+      }
 
   /** ABSORB a processed shard into an existing [[writeSignatureStore]]
-    * store — the missing half of the production loop (dedup shard →
-    * absorb → next shard). Derives the shard's band and shingle rows
-    * with the SAME LSH family (caller contract, as in
-    * [[dedupShardAgainst]]) and appends them into the store's bucketed
-    * tables; the bucket count is read from the catalog so the append
-    * can never mismatch the existing layout. An append adds files per
-    * bucket without touching existing ones — the store-side plan
-    * properties survive (bucket-local aggregate with no Exchange,
-    * store side of a shard run stays a file scan; spec-proven).
+    * store (store contract: [[graft.util.CatalogStore]]) — the missing
+    * half of the production loop (dedup shard → absorb → next shard).
+    * An append adds files per bucket without touching existing ones —
+    * the store-side plan properties survive (spec-proven).
     *
     * WHAT to absorb decides the loop's semantics:
     *
@@ -2116,66 +2014,26 @@ object Dedup {
     *    is the cheaper steady state; choose it when the threshold is
     *    loose enough that keeper-transitivity is acceptable.
     *
-    * Ids must be disjoint from everything already in the store
-    * (caller contract, as elsewhere in this family). `tokensCol`
-    * threads a precomputed original-case token array exactly as in
-    * [[absorbIntoSubstringStore]] (the tokenize-once contract in
-    * [[shingleTable]]'s scaladoc). */
+    * Ids must be disjoint from everything already in the store (caller
+    * contract): an id the store holds is taken for a replay and
+    * skipped. `tokensCol` threads a precomputed original-case token
+    * array (the tokenize-once contract in [[shingleTable]]'s scaladoc). */
   def absorbIntoSignatureStore(docs: DataFrame, idCol: String,
                                textCol: String, tablePrefix: String,
                                k: Int = 12, bands: Int = 4,
                                shingleN: Int = 3,
-                               tokensCol: Option[String] = None,
-                               idempotent: Boolean = true): Unit = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val spark = docs.sparkSession
-    val nBuckets = Bridge.bucketCount(spark, s"${tablePrefix}_bands")
-      .getOrElse(throw new IllegalStateException(
-        s"${tablePrefix}_bands is not a bucketed table — was the store " +
-          "written by writeSignatureStore?"))
-    // IDEMPOTENT by default, PER TABLE: a replayed absorb (at-least-once
-    // foreachBatch retry, accidental double call) would double every
-    // band and shingle row — double-counting bucket sizes toward the
-    // cap gate and multiplying verify-join rows, persistently. Each
-    // parquet append commits at job granularity, but there are TWO
-    // appends here, so a crash between them leaves one table ahead;
-    // guarding each table against ITS OWN ids makes a retry
-    // self-healing (it repairs exactly the missing table, duplicates
-    // neither). Guard cost: one projected id scan per table. Single
-    // writer ENFORCED (StoreLease — check-then-append cannot serialize
-    // concurrent absorbs; an overlapping writer refuses loudly).
-    def storedIds(table: String): DataFrame =
-      spark.table(table).select(col(idCol)).distinct()
-    StoreLease.withLease(spark, StoreLease.forTable(spark, tablePrefix),
-      "absorbIntoSignatureStore") { _ =>
-      // tokenize+shingle ONCE over the union of both tables' fresh docs
-      // (= docs absent from at least one table; in the no-crash common
-      // case that is simply the new batch), then restrict per table —
-      // shingling per table would double the expensive half of the job
-      val freshUnion =
-        if (idempotent)
-          docs.join(storedIds(s"${tablePrefix}_bands")
-              .intersect(storedIds(s"${tablePrefix}_shingles")),
-            Seq(idCol), "left_anti")
-        else docs
-      val sh = shingleTable(freshUnion, idCol, textCol, shingleN,
-          tokensCol = tokensCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      def freshFor(frame: DataFrame, table: String): DataFrame =
-        if (idempotent)
-          frame.join(storedIds(table), Seq(idCol), "left_anti")
-        else frame
-      lshBands(signaturesFrom(freshFor(sh, s"${tablePrefix}_bands"),
-          idCol, k), idCol, bands, rowsPer(k, bands))
-        .select(bandJoinKey.as("bk"), col(idCol))
-        .write.mode("append").bucketBy(nBuckets, "bk").sortBy("bk")
-        .format("parquet").saveAsTable(s"${tablePrefix}_bands")
-      freshFor(sh, s"${tablePrefix}_shingles")
-        .write.mode("append").bucketBy(nBuckets, idCol).sortBy(idCol)
-        .format("parquet").saveAsTable(s"${tablePrefix}_shingles")
-      sh.unpersist(blocking = false)
-    }
-  }
+                               tokensCol: Option[String] = None): Unit =
+    signatureStore(docs.sparkSession, tablePrefix, k, bands, shingleN)
+      .absorb("absorbIntoSignatureStore") { s =>
+        // shingle ONCE over the docs absent from at least one table (in
+        // the no-crash common case, simply the new batch), then restrict
+        // per table — shingling per table would double the expensive half
+        val sh = s.cache(shingleTable(s.fresh(docs, idCol, "bands",
+          "shingles"), idCol, textCol, shingleN, tokensCol = tokensCol))
+        s.append(signatureBands(s.fresh(sh, idCol, "bands"), idCol, k,
+          bands), "bands", "bk")
+        s.append(s.fresh(sh, idCol, "shingles"), "shingles", idCol)
+      }
 
   /** Per-bucket doc counts over the store's band table — groupBy on the
     * bucketing key, so the plan is scan→aggregate with NO Exchange
@@ -2230,12 +2088,11 @@ object Dedup {
                         tokensCol: Option[String] = None): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val spark = shard.sparkSession
+    signatureStore(spark, tablePrefix, k, bands, shingleN).requireFamily()
     val shardSh = shingleTable(shard, idCol, textCol, shingleN,
       tokensCol = tokensCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val shardB = lshBands(signaturesFrom(shardSh, idCol, k), idCol,
-      bands, rowsPer(k, bands))
-      .select(bandJoinKey.as("bk"), col(idCol))
+    val shardB = signatureBands(shardSh, idCol, k, bands)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val losers = shardLoserIds(shardSh, shardB, idCol, tablePrefix,
       threshold, maxBucket)
@@ -2291,10 +2148,10 @@ object Dedup {
                            textCol: String, tablePrefix: String,
                            k: Int = 12, bands: Int = 4, shingleN: Int = 3,
                            maxBucket: Int = 10000): DataFrame = {
-    val shardB = lshBands(
-      signaturesFrom(shingleTable(shard, idCol, textCol, shingleN),
-        idCol, k), idCol, bands, rowsPer(k, bands))
-      .select(bandJoinKey.as("bk"), col(idCol))
+    signatureStore(shard.sparkSession, tablePrefix, k, bands, shingleN)
+      .requireFamily()
+    val shardB = signatureBands(
+      shingleTable(shard, idCol, textCol, shingleN), idCol, k, bands)
     Metrics.capReport(combinedBucketSizes(shardB, tablePrefix),
       "__tot", maxBucket)
   }
@@ -2372,45 +2229,45 @@ object Dedup {
       .select(bandJoinKey.as("bk"), col(idCol))
   }
 
-  /** Image twin of [[writeSignatureStore]]: persists a corpus's
-    * perceptual-hash signatures for INCREMENTAL image near-dedup as two
-    * bucketed tables (`<tablePrefix>_ibands` / `<tablePrefix>_ihashes`,
-    * files under `path`) — bands for the no-Exchange candidate join,
-    * the 8-byte hashes for exact popcount verification. The store is
-    * O(corpus) LONGs (vs O(corpus tokens) for the text store — hashes
-    * ARE the full verification evidence, so the image store is tiny).
-    * `hashCol` is the caller's [[graft.images.PerceptualHash.dHashCol]]
-    * (or any 64-bit LSH-able fingerprint); hash once at ingest, store
-    * forever — the decode never re-runs. Null hashes (undecodable
-    * payloads) are excluded. */
+  /** The image signature store: `<tablePrefix>_ibands` (bk, id) and
+    * `<tablePrefix>_ihashes` (id, __ph) — a [[graft.util.CatalogStore]]
+    * whose family is its writer alone (the band layout is fixed). */
+  private def imageStore(spark: org.apache.spark.sql.SparkSession,
+                         tablePrefix: String): CatalogStore =
+    CatalogStore(spark, tablePrefix, "img", "writeImageSignatureStore",
+      Seq("ibands", "ihashes"))
+
+  /** (id, __ph) rows of the non-null hashes — the image store's rows. */
+  private def imageHashes(df: DataFrame, idCol: String,
+                          hashCol: String): DataFrame =
+    df.filter(col(hashCol).isNotNull)
+      .select(col(idCol), col(hashCol).cast("long").as("__ph"))
+
+  /** Image twin of [[writeSignatureStore]] (store contract:
+    * [[graft.util.CatalogStore]]): persists a corpus's perceptual-hash
+    * signatures for INCREMENTAL image near-dedup as two bucketed tables
+    * — bands for the no-Exchange candidate join, the 8-byte hashes for
+    * exact popcount verification. The store is O(corpus) LONGs (hashes
+    * ARE the full verification evidence), so the layout derives from
+    * the hash frame with no expansion. `hashCol` is the caller's
+    * [[graft.images.PerceptualHash.dHashCol]] (or any 64-bit LSH-able
+    * fingerprint); hash once at ingest, store forever. Null hashes
+    * (undecodable payloads) are excluded. */
   def writeImageSignatureStore(df: DataFrame, idCol: String,
                                hashCol: String, tablePrefix: String,
-                               path: String, nBuckets: Int = 0): Unit = {
-    val h = df.filter(col(hashCol).isNotNull)
-      .select(col(idCol), col(hashCol).cast("long").as("__ph"))
-    // nBuckets = 0 derives from the (id, hash) frame — ~24 bytes/row,
-    // already the store's own size, so no expansion
-    val nb = if (nBuckets > 0) nBuckets
-      else suggestedStoreBuckets(h, expansion = 1.0)
-    StoreLease.withLease(df.sparkSession,
-      StoreLease.forTable(df.sparkSession, tablePrefix),
-      "writeImageSignatureStore") { _ =>
-      // r21 (guide §2.6): the two independent table writes overlap
-      // from two driver threads — the writeSignatureStore pattern;
-      // the hash frame is cheap expressions over a long column, so
-      // there is no shared cache to pre-materialize here. Overlap.both
-      // settles BOTH writes before the lease scope ends (r22).
-      graft.util.Overlap.both(df.sparkSession) {
-        imageBandRows(h, idCol)
-          .write.mode("overwrite").option("path", s"$path/ibands")
-          .bucketBy(nb, "bk").sortBy("bk")
-          .format("parquet").saveAsTable(s"${tablePrefix}_ibands")
-      } {
-        h.write.mode("overwrite").option("path", s"$path/ihashes")
-          .bucketBy(nb, idCol).sortBy(idCol)
-          .format("parquet").saveAsTable(s"${tablePrefix}_ihashes")
+                               path: String): Unit = {
+    val h = imageHashes(df, idCol, hashCol)
+    imageStore(df.sparkSession, tablePrefix)
+      .write(path, h, expansion = 1.0) { s =>
+        // the two independent writes overlap (the writeSignatureStore
+        // pattern); the hash frame is cheap expressions over a long
+        // column, so there is no shared cache to pre-materialize
+        graft.util.Overlap.both(df.sparkSession) {
+          s.overwrite(imageBandRows(h, idCol), "ibands", "bk")
+        } {
+          s.overwrite(h, "ihashes", idCol)
+        }
       }
-    }
   }
 
   /** Per-bucket counts over the image store's band table — bucket-local
@@ -2439,8 +2296,8 @@ object Dedup {
                              maxHamming: Int = 10,
                              maxBucket: Int = 10000): DataFrame = {
     val spark = shard.sparkSession
-    val h = shard.filter(col(hashCol).isNotNull)
-      .select(col(idCol), col(hashCol).cast("long").as("__ph"))
+    imageStore(spark, tablePrefix).requireFamily()
+    val h = imageHashes(shard, idCol, hashCol)
     val shardB = imageBandRows(h, idCol)
     val storeB = spark.table(s"${tablePrefix}_ibands")
     val storeH = spark.table(s"${tablePrefix}_ihashes")
@@ -2477,44 +2334,20 @@ object Dedup {
     shard.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** Image twin of [[absorbIntoSignatureStore]]: appends a processed
-    * shard's band and hash rows into the existing image store (bucket
-    * count read from the catalog — appends can't mismatch the layout).
-    * Same full-shard vs survivors-only semantics tradeoff; see the
-    * text absorb's scaladoc. */
+  /** Image twin of [[absorbIntoSignatureStore]] (store contract:
+    * [[graft.util.CatalogStore]]): appends a processed shard's band and
+    * hash rows. Same full-shard vs survivors-only semantics tradeoff;
+    * see the text absorb's scaladoc. */
   def absorbIntoImageSignatureStore(docs: DataFrame, idCol: String,
                                     hashCol: String,
-                                    tablePrefix: String,
-                                    idempotent: Boolean = true): Unit = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val spark = docs.sparkSession
-    val nBuckets = Bridge.bucketCount(spark, s"${tablePrefix}_ibands")
-      .getOrElse(throw new IllegalStateException(
-        s"${tablePrefix}_ibands is not a bucketed table — was the " +
-          "store written by writeImageSignatureStore?"))
-    // per-table replay guard — see absorbIntoSignatureStore's scaladoc
-    // comment: each append is job-atomic but there are two of them, so
-    // guarding each table against its own ids makes a retry
-    // self-healing (repairs the missing table, duplicates neither)
-    def freshFor(table: String): DataFrame =
-      if (idempotent)
-        docs.join(spark.table(table).select(col(idCol)).distinct(),
-          Seq(idCol), "left_anti")
-      else docs
-    def hashes(d: DataFrame): DataFrame = d
-      .filter(col(hashCol).isNotNull)
-      .select(col(idCol), col(hashCol).cast("long").as("__ph"))
-    // single writer enforced — see absorbIntoSignatureStore
-    StoreLease.withLease(spark, StoreLease.forTable(spark, tablePrefix),
-      "absorbIntoImageSignatureStore") { _ =>
-      imageBandRows(hashes(freshFor(s"${tablePrefix}_ibands")), idCol)
-        .write.mode("append").bucketBy(nBuckets, "bk").sortBy("bk")
-        .format("parquet").saveAsTable(s"${tablePrefix}_ibands")
-      hashes(freshFor(s"${tablePrefix}_ihashes"))
-        .write.mode("append").bucketBy(nBuckets, idCol).sortBy(idCol)
-        .format("parquet").saveAsTable(s"${tablePrefix}_ihashes")
-    }
-  }
+                                    tablePrefix: String): Unit =
+    imageStore(docs.sparkSession, tablePrefix)
+      .absorb("absorbIntoImageSignatureStore") { s =>
+        s.append(imageBandRows(imageHashes(s.fresh(docs, idCol, "ibands"),
+          idCol, hashCol), idCol), "ibands", "bk")
+        s.append(imageHashes(s.fresh(docs, idCol, "ihashes"), idCol,
+          hashCol), "ihashes", idCol)
+      }
 
   /** Recall-loss report for the incremental image store's combined
     * bucket cap — the [[shardBucketCapReport]] twin; see
@@ -2522,8 +2355,8 @@ object Dedup {
   def imageShardBucketCapReport(shard: DataFrame, idCol: String,
                                 hashCol: String, tablePrefix: String,
                                 maxBucket: Int = 10000): DataFrame = {
-    val h = shard.filter(col(hashCol).isNotNull)
-      .select(col(idCol), col(hashCol).cast("long").as("__ph"))
+    imageStore(shard.sparkSession, tablePrefix).requireFamily()
+    val h = imageHashes(shard, idCol, hashCol)
     Metrics.capReport(combinedSizes(imageBandRows(h, idCol),
       imageStoreBandCounts(shard.sparkSession, tablePrefix)),
       "__tot", maxBucket)

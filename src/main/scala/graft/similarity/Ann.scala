@@ -360,7 +360,8 @@ object Ann {
     val rows = centroids.select(col("cid"), col("__ce"), col("__cn"))
       .orderBy(col("cid")).collect()
     assignArgmax(corpus, idCol, vecCol, rows,
-      centroids.schema("cid").dataType, centroids.schema("__ce").dataType)
+      centroids.schema("cid").dataType, centroids.schema("__ce").dataType,
+      "the ivfAssignTo centroid table")
   }
 
   /** The literal-unrolled argmax over an already-collected,
@@ -371,10 +372,15 @@ object Ann {
                            vecCol: String,
                            rows: Array[org.apache.spark.sql.Row],
                            cidType: org.apache.spark.sql.types.DataType,
-                           ceType: org.apache.spark.sql.types.DataType)
+                           ceType: org.apache.spark.sql.types.DataType,
+                           centroidTable: String)
       : DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.graftbridge.Bridge
+    val nullRow = rows.find(r => r.isNullAt(1) || r.isNullAt(2))
+    require(nullRow.isEmpty, s"$centroidTable has a null centroid (cid " +
+      s"${nullRow.map(_.get(0)).orNull}): a null vector has no cosine to " +
+      "any document — drop null vectors before building centroids")
     val n = rows.length
     if (n == 0) {
       // the crossJoin+Window form emitted zero rows against an empty
@@ -396,8 +402,10 @@ object Ann {
     val entries = rows.zipWithIndex.map { case (r, i) =>
       val ce = Bridge.column(Literal.create(r.get(1), ceType))
       val cn = lit(r.getDouble(2))
+      // `+ 0.0` maps -0.0 to +0.0 (NaN and null pass through), so a
+      // -0.0/+0.0 tie keeps the smaller cid as the Window order does
       val s = when(col("__n") === 0.0 || cn === 0.0, 0.0)
-        .otherwise(dot(col(vecCol), ce) / (col("__n") * cn))
+        .otherwise(dot(col(vecCol), ce) / (col("__n") * cn)) + lit(0.0)
       struct(s.as("__cs"), lit(n - 1 - i).as("__ri"),
         Bridge.column(Literal.create(r.get(0), cidType)).as("cid"))
     }
@@ -465,7 +473,8 @@ object Ann {
       // locally it coalesces to ~one file per cell; at scale it
       // splits oversized cells to the advisory partition size.
       assignArgmax(corpus, idCol, vecCol, rows,
-        centDf.schema("cid").dataType, centDf.schema("__ce").dataType)
+        centDf.schema("cid").dataType, centDf.schema("__ce").dataType,
+        s"$path/centroids")
         .hint("rebalance", col("cid"))
         .write.mode("overwrite").partitionBy("cid")
         .parquet(s"$path/cells")
@@ -558,7 +567,8 @@ object Ann {
     val cdf = spark.read.parquet(s"$path/centroids")
     val rows = cdf.select(col("cid"), col("__ce"), col("__cn"))
       .orderBy(col("cid")).collect()
-    val dims = rows.map(_.getAs[scala.collection.Seq[_]](1).size).distinct
+    val dims = rows.filterNot(_.isNullAt(1))
+      .map(_.getAs[scala.collection.Seq[_]](1).size).distinct
     require(dims.length == 1, s"$path/centroids is not a writeIvfIndex " +
       s"centroid table (vector dims ${dims.mkString(",")})")
     val dim = dims.head
@@ -569,7 +579,8 @@ object Ann {
       healCells(spark, path, Some(lease))
       val guarded = guardVecDim(batch, vecCol, dim, s"index at $path")
       val assigned = assignArgmax(guarded, idCol, vecCol, rows,
-        cdf.schema("cid").dataType, cdf.schema("__ce").dataType)
+        cdf.schema("cid").dataType, cdf.schema("__ce").dataType,
+        s"$path/centroids")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val fresh: Option[DataFrame] =

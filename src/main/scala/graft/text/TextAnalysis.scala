@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 import graft.enrich.CaptionStats
-import graft.util.StoreLease
+import graft.util.CatalogStore
 
 /** Training-data text analysis (north-star extensions beyond the reference
   * surface; BASELINE.json): language ID, quality scoring, token counting,
@@ -399,30 +399,29 @@ object TextAnalysis {
     }
   }
 
-  /** Persisted unigram LM STORE — the incremental complement of
-    * [[unigramSurprisal]], the d15 store discipline applied to
-    * scoring: at 100 TB nobody recomputes corpus token counts per
-    * crawl; the vocabulary-sized (tok, cnt) table materializes ONCE,
-    * bucketed+sorted by `tok` (the k6 layout), and each new shard
-    * scores against it with NO store-side shuffle or recompute — the
-    * bucketed scan's HashPartitioning satisfies the token join as-is.
-    * Refresh path: retrain (one token shuffle over the grown corpus)
-    * or union-rewrite the counts table; counts MERGE is not an append,
-    * so there is deliberately no absorb that would silently change
-    * cnt values under a fixed bucket layout. */
+  /** The LM store: one table (tok, cnt) — a [[graft.util.CatalogStore]]
+    * whose family is its writer alone (tokenization is fixed). */
+  private def lmStore(spark: org.apache.spark.sql.SparkSession,
+                      table: String): CatalogStore =
+    CatalogStore(spark, table, "lm", "writeLmStore", Seq(""))
+
+  /** Persisted unigram LM STORE (store contract:
+    * [[graft.util.CatalogStore]]) — the incremental complement of
+    * [[unigramSurprisal]]: at 100 TB nobody recomputes corpus token
+    * counts per crawl; the vocabulary-sized (tok, cnt) table
+    * materializes ONCE, bucketed+sorted by `tok` (the k6 layout), and
+    * each new shard scores against it with NO store-side shuffle or
+    * recompute. Refresh path: rewrite it from the grown corpus; counts
+    * MERGE is not an append, so there is deliberately no absorb. */
   def writeLmStore(df: DataFrame, textCol: String, table: String,
-                   path: String, nBuckets: Int = 8): Unit =
-    // single writer enforced: the refresh path is a full rewrite, and
-    // two concurrent rewrites race the overwrite commit (StoreLease)
-    StoreLease.withLease(df.sparkSession,
-      StoreLease.forTable(df.sparkSession, table), "writeLmStore") { _ =>
-      df.select(explode(CaptionStats.tokens(lower(col(textCol))))
-          .as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("cnt"))
-        .write.mode("overwrite").option("path", path)
-        .bucketBy(nBuckets, "tok").sortBy("tok")
-        .format("parquet").saveAsTable(table)
+                   path: String): Unit = {
+    val counts = df.select(explode(CaptionStats.tokens(lower(col(textCol))))
+        .as("tok"))
+      .groupBy("tok").agg(count(lit(1)).as("cnt"))
+    lmStore(df.sparkSession, table).write(path, counts, expansion = 1.0) {
+      _.overwrite(counts, "", "tok")
     }
+  }
 
   /** Score a NEW shard against a persisted [[writeLmStore]] table:
     * t11's integer-exact surprisal where counts come from the store,
@@ -439,6 +438,7 @@ object TextAnalysis {
   def surprisalAgainstStore(shard: DataFrame, idCol: String,
                             textCol: String, table: String,
                             tokensCol: Option[String] = None): DataFrame = {
+    lmStore(shard.sparkSession, table).requireFamily()
     val counts = shard.sparkSession.table(table)
     val total = counts.agg(sum("cnt")).head.getLong(0)
     val totalBits = java.lang.Long.toBinaryString(total).length

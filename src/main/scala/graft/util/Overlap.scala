@@ -23,7 +23,9 @@ import org.apache.spark.sql.SparkSession
   *     group/description/pool are thread-local, so jobs submitted from
   *     a bare `ExecutionContext.global` thread escape the caller's
   *     `cancelJobGroup` — each branch re-pins the caller's values
-  *     before running.
+  *     before running, and restores the pool thread's own afterwards
+  *     (a stale job group left on a pooled thread would scope a later,
+  *     unrelated task's jobs).
   */
 object Overlap {
 
@@ -38,12 +40,22 @@ object Overlap {
     * argument order) with the other's failure suppressed — after both
     * threads have finished, so no job is left running when this
     * returns or throws. */
-  def both[A, B](spark: SparkSession)(fa: => A)(fb: => B): (A, B) = {
+  def both[A, B](spark: SparkSession)(fa: => A)(fb: => B): (A, B) =
+    bothOrRelease(spark)(fa)(fb)(_ => ())
+
+  /** [[both]] for a second branch that builds a resource only the
+    * success path consumes (a cache, a prepared handle): when `fa`
+    * fails and `fb` succeeded, `release` frees `fb`'s result before the
+    * failure propagates. */
+  def bothOrRelease[A, B](spark: SparkSession)(fa: => A)(fb: => B)
+                         (release: B => Unit): (A, B) = {
     val sc = spark.sparkContext
     val props = inherited.map(k => k -> sc.getLocalProperty(k))
     def pinned[T](body: => T): T = {
+      val own = inherited.map(k => k -> sc.getLocalProperty(k))
       props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      body
+      try body
+      finally own.foreach { case (k, v) => sc.setLocalProperty(k, v) }
     }
     implicit val ec: ExecutionContext = ExecutionContext.global
     val f1 = Future(pinned(fa))
@@ -53,6 +65,7 @@ object Overlap {
     (r1, r2) match {
       case (Success(a), Success(b)) => (a, b)
       case _ =>
+        r2.foreach(b => Try(release(b)))
         val fails = Seq(r1, r2).collect { case Failure(t) => t }
         val head = fails.head
         fails.tail.foreach { t =>

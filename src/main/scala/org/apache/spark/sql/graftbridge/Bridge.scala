@@ -27,45 +27,31 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty
 
-  /** The bucket count of a catalog table, if it is bucketed — appends
-    * into a bucketed store must repeat the EXISTING layout exactly
-    * (Spark rejects a mismatched `bucketBy` spec), so writers read it
-    * from the catalog instead of trusting a caller-supplied number.
+  /** Catalog metadata of a table — what [[graft.util.CatalogStore]]
+    * reads a store's layout, family and location from.
     * `sessionState` is `private[sql]` in Spark 4 — same shim rationale
     * as above. */
+  private def metadata(spark: org.apache.spark.sql.SparkSession,
+                       table: String) = {
+    val ss = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState
+    ss.catalog.getTableMetadata(ss.sqlParser.parseTableIdentifier(table))
+  }
+
+  /** The bucket count of a catalog table, if it is bucketed. */
   def bucketCount(spark: org.apache.spark.sql.SparkSession,
-                  table: String): Option[Int] = {
-    val ss = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState
-    ss.catalog.getTableMetadata(ss.sqlParser.parseTableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-  }
+                  table: String): Option[Int] =
+    metadata(spark, table).bucketSpec.map(_.numBuckets)
 
-  /** A table property of a catalog table, if present — stores persist
-    * their derivation parameters (e.g. the substring store's seedN) so
-    * later absorbs/reads can REFUSE a mismatched family instead of
-    * silently joining incompatible hashes. Same shim rationale. */
+  /** A table property of a catalog table, if present. */
   def tableProperty(spark: org.apache.spark.sql.SparkSession,
-                    table: String, key: String): Option[String] = {
-    val ss = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState
-    ss.catalog.getTableMetadata(ss.sqlParser.parseTableIdentifier(table))
-      .properties.get(key)
-  }
+                    table: String, key: String): Option[String] =
+    metadata(spark, table).properties.get(key)
 
-  /** The storage location of a catalog table, if set — an absorb that
-    * rewrites an EXTERNAL store table in place must recreate it at the
-    * SAME path (a silently relocated store would orphan the original
-    * files and split the state across two directories). Same shim
-    * rationale. */
+  /** The storage location of a catalog table, if set. */
   def tableLocation(spark: org.apache.spark.sql.SparkSession,
-                    table: String): Option[java.net.URI] = {
-    val ss = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState
-    Option(ss.catalog
-      .getTableMetadata(ss.sqlParser.parseTableIdentifier(table))
-      .storage.locationUri).flatten
-  }
+                    table: String): Option[java.net.URI] =
+    Option(metadata(spark, table).storage.locationUri).flatten
 
   /** DataFrame over a custom LogicalPlan (`Dataset.ofRows` is
     * `private[sql]` in Spark 4 — same shim rationale as above; used by

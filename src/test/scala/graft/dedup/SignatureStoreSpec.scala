@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
+import graft.util.CatalogStore
 import org.apache.spark.sql.functions._
 
 /** Incremental dedup against a persisted signature store (d15 family):
@@ -168,17 +169,17 @@ class SignatureStoreSpec extends SparkSpec {
     "scale as pow2(size × expansion / target), cap respected — and " +
     "writeSignatureStore's default derives it") {
     // spark.range stats are 8 bytes/row, known without running a job
-    Dedup.suggestedStoreBuckets(spark.range(100).toDF()) shouldBe 8
+    CatalogStore.suggestedBuckets(spark.range(100).toDF()) shouldBe 8
     // 1G rows × 8 B × 2.0 expansion = 16 GiB / 256 MiB = 64 buckets
-    Dedup.suggestedStoreBuckets(spark.range(1L << 30).toDF()) shouldBe 64
+    CatalogStore.suggestedBuckets(spark.range(1L << 30).toDF()) shouldBe 64
     // non-pow2 need rounds UP: 65 × 256 MiB worth → 128
-    Dedup.suggestedStoreBuckets(spark.range((1L << 30) + (1L << 25))
+    CatalogStore.suggestedBuckets(spark.range((1L << 30) + (1L << 25))
       .toDF()) shouldBe 128
     // explicit target: same frame, smaller buckets → more of them
-    Dedup.suggestedStoreBuckets(spark.range(1L << 30).toDF(),
+    CatalogStore.suggestedBuckets(spark.range(1L << 30).toDF(),
       targetBytes = 128L << 20) shouldBe 128
     // cap: an absurd estimate stays at 2^20
-    Dedup.suggestedStoreBuckets(spark.range(Long.MaxValue >> 4).toDF())
+    CatalogStore.suggestedBuckets(spark.range(Long.MaxValue >> 4).toDF())
       .shouldBe(1 << 20)
     // the default store write derives (fixture-sized → the floor 8)
     import spark.implicits._

@@ -158,6 +158,46 @@ class AnnSpec extends SparkSpec {
       cents.filter(col("cid") < 0)).count() shouldBe 0L
   }
 
+  test("ivfAssignTo: a -0.0 vs +0.0 cosine tie picks the smaller cid, " +
+    "as the crossJoin reference does") {
+    // v·c10 = -1e-150 over norms 1e150 × 1e150 underflows to -0.0;
+    // v·c11 is exactly +0.0
+    val corpus = Seq((1L, Array(1e150, 0.0))).toDF("vec_id", "embedding")
+    val cents = Seq((10L, Array(-1e-300, 1e150)), (11L, Array(0.0, 1.0)))
+      .toDF("cid", "__ce").withColumn("__cn", Ann.l2Norm(col("__ce")))
+    val cs = corpus.crossJoin(cents).select(col("cid"),
+      (Ann.dot(col("embedding"), col("__ce")) /
+        (Ann.l2Norm(col("embedding")) * col("__cn"))).as("cs"))
+      .orderBy("cid").collect().map(_.getDouble(1))
+    // the fixture really produces the signed-zero tie
+    java.lang.Double.doubleToRawLongBits(cs(0)) shouldBe
+      java.lang.Double.doubleToRawLongBits(-0.0)
+    java.lang.Double.doubleToRawLongBits(cs(1)) shouldBe 0L
+    Ann.ivfAssignTo(corpus, "vec_id", "embedding", cents)
+      .select("cid").as[Long].collect() shouldBe Array(10L)
+  }
+
+  test("a null centroid is refused by a require naming the centroid " +
+    "table, not a NullPointerException") {
+    val corpus = Seq((1L, Array(1f, 0f))).toDF("vec_id", "embedding")
+    val cents = Seq((10L, Array(1f, 0f)),
+        (11L, null.asInstanceOf[Array[Float]]))
+      .toDF("cid", "__ce").withColumn("__cn", Ann.l2Norm(col("__ce")))
+    val e = intercept[IllegalArgumentException] {
+      Ann.ivfAssignTo(corpus, "vec_id", "embedding", cents)
+    }
+    e.getMessage should include("ivfAssignTo centroid table")
+    e.getMessage should include("cid 11")
+    // the persisted index names its centroid path
+    val path = "/tmp/graft_test_sinks/ivf_null_centroid"
+    Ann.writeIvfIndex(Seq((1L, Array(1f, 0f)), (2L, Array(0f, 1f)))
+      .toDF("vec_id", "embedding"), "vec_id", "embedding", 2, path)
+    cents.write.mode("overwrite").parquet(s"$path/centroids")
+    intercept[IllegalArgumentException] {
+      Ann.absorbIvfIndex(spark, path, corpus, "vec_id", "embedding")
+    }.getMessage should include(s"$path/centroids")
+  }
+
   test("IVF: probes restrict search, self always found, subset of brute") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val q = emb.filter(col("vec_id") === 0)

@@ -80,4 +80,41 @@ class OverlapSpec extends SparkSpec {
       b shouldBe "overlap-spec-group"
     } finally sc.clearJobGroup()
   }
+
+  test("branches restore the pool threads' local properties: a later " +
+    "ExecutionContext.global task sees no inherited job group") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val sc = spark.sparkContext
+    // enough short tasks to land on every pool worker
+    def groupsSeen(): Set[String] = Await.result(Future.traverse(
+      (1 to 8 * Runtime.getRuntime.availableProcessors).toList) { _ =>
+        Future {
+          Thread.sleep(5)
+          String.valueOf(sc.getLocalProperty("spark.jobGroup.id"))
+        }
+      }, 1.minute).toSet
+    // start every worker while this thread holds no group: a worker
+    // created later would inherit this thread's properties at birth
+    groupsSeen()
+    sc.setJobGroup("overlap-leak", "stale", false)
+    try Overlap.both(spark)(1)(2) shouldBe ((1, 2))
+    finally sc.clearJobGroup()
+    groupsSeen() should not contain "overlap-leak"
+  }
+
+  test("bothOrRelease releases the second branch's result when the " +
+    "first fails, and only then") {
+    val released = new AtomicLong(0L)
+    intercept[RuntimeException] {
+      Overlap.bothOrRelease(spark) {
+        throw new RuntimeException("first died")
+      }("handle")(_ => released.incrementAndGet())
+    }.getMessage shouldBe "first died"
+    released.get() shouldBe 1L
+    Overlap.bothOrRelease(spark)(1)("handle")(_ =>
+      released.incrementAndGet()) shouldBe ((1, "handle"))
+    released.get() shouldBe 1L
+  }
 }
